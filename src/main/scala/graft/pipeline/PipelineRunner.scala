@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
+import org.json4s.{JBool, JDecimal, JInt, JNull, JObject, JString, JValue}
+import org.json4s.jackson.JsonMethods
 import java.nio.file.{Files, Path, Paths}
 import scala.collection.mutable
 
@@ -595,27 +597,9 @@ final class PipelineRunner(spark: SparkSession, spec0: PipelineSpec,
     * partitions); on object storage the atomic link maps to a
     * conditional put (If-None-Match), the same primitive Delta/
     * Iceberg commit with.
-    *
-    * Legacy layout (pre-self-contained commits): schema/sidecars as
-    * sibling `gen_<n>.<key>` files and the live generation named by a
-    * `_CURRENT` pointer file flipped after a NON-atomic manifest
-    * write. Such warehouses are read correctly — while `_CURRENT`
-    * exists it stays authoritative, so a torn/unpublished legacy
-    * `gen_<m>` above the pointer is NOT retroactively committed — and
-    * are migrated by the next publish: orphan gens above the pointer
-    * are quarantined to `_aborted_gen_<m>`, the pointer is removed,
-    * and the table is highest-id-wins from then on.
     */
-  private val LegacyCurrentPointer = "_CURRENT"
-
-  private def currentGenName(name: String): Option[String] = {
-    val gens = generations(name)
-    val ptr = Paths.get(tablePath(name), LegacyCurrentPointer)
-    if (Files.exists(ptr)) {
-      val p = Files.readString(ptr).trim
-      if (gens.contains(p)) Some(p) else gens.lastOption
-    } else gens.lastOption
-  }
+  private def currentGenName(name: String): Option[String] =
+    generations(name).lastOption
 
   private def genLines(name: String, gen: String): Seq[String] =
     Files.readString(Paths.get(tablePath(name), gen)).linesIterator
@@ -637,26 +621,25 @@ final class PipelineRunner(spark: SparkSession, spec0: PipelineSpec,
   private def decodeSidecar(s: String): String =
     s.replace("%0D", "\r").replace("%0A", "\n").replace("%25", "%")
 
-  private def genSchema(name: String, gen: String): Option[StructType] =
+  /** Every committed generation carries its schema header; a manifest
+    * without one was not written by `publishManifest`.
+    */
+  private def genSchema(name: String, gen: String): StructType =
     genHeader(name, gen, "schema").map(decodeSidecar)
       .map(DataType.fromJson(_).asInstanceOf[StructType])
-      .orElse { // legacy sibling-file layout (pre-self-contained commits)
-        val f = Paths.get(tablePath(name), s"$gen.schema")
-        if (Files.exists(f))
-          Some(DataType.fromJson(Files.readString(f)).asInstanceOf[StructType])
-        else None
-      }
+      .getOrElse(sys.error(s"table $name @ $gen: manifest has no " +
+        "#schema header — not a graft warehouse generation; drop the " +
+        "table and rebuild it"))
 
   private def currentManifest(name: String): Option[Seq[String]] =
     currentGenName(name).map(genManifest(name, _))
 
-  /** All sidecar key→value pairs of the live generation (header lines
-    * plus the legacy sibling-file streamids layout). Sidecars are
+  /** All sidecar key→value pairs of the live generation. Sidecars are
     * TABLE-level metadata: publishManifest carries every key forward
     * into the next generation unless the writer overrides it.
     */
-  private def currentSidecars(name: String): Map[String, String] = {
-    val fromHeader = currentGenName(name).map { gen =>
+  private def currentSidecars(name: String): Map[String, String] =
+    currentGenName(name).map { gen =>
       genLines(name, gen).collect {
         case l if l.startsWith("#sidecar.") =>
           val body = l.stripPrefix("#sidecar.")
@@ -664,9 +647,6 @@ final class PipelineRunner(spark: SparkSession, spec0: PipelineSpec,
           body.take(i) -> decodeSidecar(body.drop(i + 1))
       }.toMap
     }.getOrElse(Map.empty)
-    if (fromHeader.contains("streamids")) fromHeader
-    else fromHeader ++ genSidecar(name, "streamids").map("streamids" -> _)
-  }
 
   /** Read a table-level sidecar value (e.g. a format-version stamp an
     * operator persisted next to its table). None when the table or the
@@ -676,7 +656,7 @@ final class PipelineRunner(spark: SparkSession, spec0: PipelineSpec,
     genSidecar(name, key)
 
   private def currentSchema(name: String): Option[StructType] =
-    currentGenName(name).flatMap(genSchema(name, _))
+    currentGenName(name).map(genSchema(name, _))
 
   /** Committed generation names, oldest → newest. Superseded
     * generations remain readable (time travel) until `vacuum`.
@@ -696,13 +676,12 @@ final class PipelineRunner(spark: SparkSession, spec0: PipelineSpec,
     * the partition columns on every branch, keeping the union aligned.
     */
   private def readMembers(name: String, members: Seq[String],
-      schema: Option[StructType]): DataFrame = {
+      schema: StructType): DataFrame = {
     val root = tablePath(name)
     members.groupBy(m => m.split('/').take(2).mkString("/"))
       .toSeq.sortBy(_._1)
       .map { case (batch, ms) =>
-        val r0 = spark.read.option("basePath", s"$root/$batch")
-        schema.map(r0.schema).getOrElse(r0)
+        spark.read.option("basePath", s"$root/$batch").schema(schema)
           .parquet(ms.map(m => s"$root/$m"): _*)
       }
       .reduce(_ unionByName _)
@@ -755,11 +734,8 @@ final class PipelineRunner(spark: SparkSession, spec0: PipelineSpec,
     val df0 =
       if (members.isEmpty)
         // a partitioned write of zero rows commits no members
-        schema match {
-          case Some(sc) => spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc)
-          case None => sys.error(s"table $name is empty with no schema")
-        }
+        spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       else readMembers(name, members, schema)
     // merge-on-read tables reconcile latest-version-wins BEFORE the
     // surface projection (the version column is itself hidden)
@@ -769,11 +745,9 @@ final class PipelineRunner(spark: SparkSession, spec0: PipelineSpec,
     // PARTITION columns last regardless of the requested schema, so
     // re-select in stored-schema order — the storage layout (e.g.
     // merge partitionBy) must not leak into the column order
-    val visible = dfm.columns.filterNot(hiddenCols.contains)
-    val ordered = schema
-      .map(_.fieldNames.filterNot(hiddenCols.contains).filter(visible.contains))
-      .getOrElse(visible)
-    dfm.select(ordered.toSeq.map(col): _*)
+    val visible = dfm.columns.toSet
+    dfm.select(schema.fieldNames.toSeq
+      .filter(f => !hiddenCols.contains(f) && visible(f)).map(col): _*)
   }
 
   def tableExists(name: String): Boolean =
@@ -1033,7 +1007,6 @@ final class PipelineRunner(spark: SparkSession, spec0: PipelineSpec,
       val dir = Paths.get(tablePath(name))
       Files.createDirectories(dir)
       val carried = (currentSidecars(name) -- dropSidecars) ++ sidecars
-      migrateLegacyPointer(name)
       val header = s"#schema:${encodeSidecar(schema.json)}" +:
         carried.toSeq.sortBy(_._1).map { case (k, v) =>
           s"#sidecar.$k:${encodeSidecar(v)}"
@@ -1342,42 +1315,9 @@ final class PipelineRunner(spark: SparkSession, spec0: PipelineSpec,
     } finally Files.deleteIfExists(tmp)
   }
 
-  /** One-time migration of a legacy `_CURRENT`-pointer warehouse,
-    * called under the table lock before the first new-protocol
-    * commit: gen files ABOVE the pointer are aborted legacy publishes
-    * (a crash between the old non-atomic manifest write and the
-    * pointer flip — possibly torn), so quarantine them (and their
-    * sibling sidecars) to `_aborted_<gen>[.key]` rather than letting
-    * highest-id-wins retroactively commit them; then drop the
-    * pointer. Vacuum deletes quarantined files.
-    */
-  private def migrateLegacyPointer(name: String): Unit = {
-    val dir = Paths.get(tablePath(name))
-    val ptr = dir.resolve(LegacyCurrentPointer)
-    if (Files.exists(ptr)) {
-      val live = Files.readString(ptr).trim
-      val liveId = live.stripPrefix("gen_").toLongOption.getOrElse(-1L)
-      listDir(dir)
-        .filter { p =>
-          val f = p.getFileName.toString
-          f.startsWith("gen_") &&
-            f.takeWhile(_ != '.').stripPrefix("gen_")
-              .toLongOption.exists(_ > liveId)
-        }
-        .foreach(p => Files.move(p,
-          dir.resolve(s"_aborted_${p.getFileName.toString}")))
-      Files.deleteIfExists(ptr)
-    }
-  }
-
   private def genSidecar(name: String, key: String): Option[String] =
-    currentGenName(name).flatMap { gen =>
-      genHeader(name, gen, s"sidecar.$key").map(decodeSidecar)
-        .orElse { // legacy sibling-file layout
-          val f = Paths.get(tablePath(name), s"$gen.$key")
-          if (Files.exists(f)) Some(Files.readString(f)) else None
-        }
-    }
+    currentGenName(name).flatMap(gen =>
+      genHeader(name, gen, s"sidecar.$key").map(decodeSidecar))
 
   /** Committed-batchId bookkeeping for the streaming sink: a
     * contiguous high-water mark (`hwm:<n>` — every id ≤ n committed)
@@ -1523,9 +1463,7 @@ final class PipelineRunner(spark: SparkSession, spec0: PipelineSpec,
         require(Files.exists(Paths.get(tablePath(name)).resolve(m)),
           s"restore $name @ $gen: member $m no longer exists (vacuumed)")
       }
-      val schema = genSchema(name, gen).getOrElse(sys.error(
-        s"restore $name @ $gen: manifest carries no schema header " +
-          "(legacy layout) — read + replaceTable instead"))
+      val schema = genSchema(name, gen)
       val restoredMor = Seq(MorKeys, MorVer).flatMap(k =>
         genHeader(name, gen, s"sidecar.$k").map(decodeSidecar)
           .map(k -> _)).toMap
@@ -1636,9 +1574,10 @@ final class PipelineRunner(spark: SparkSession, spec0: PipelineSpec,
     // the whole read-modify-write holds the table lock: a concurrent
     // publish between the manifest read and the compacted commit
     // would otherwise have its rows silently dropped
-    val schema = currentSchema(name)
-    val members = currentManifest(name)
+    val gen = currentGenName(name)
       .getOrElse(sys.error(s"table $name does not exist"))
+    val schema = genSchema(name, gen)
+    val members = genManifest(name, gen)
     if (members.nonEmpty) {
       // Derive the storage partition layout — visible columns
       // (insert_overwrite, partitioned merge) AND hidden ones (merge
@@ -1653,12 +1592,10 @@ final class PipelineRunner(spark: SparkSession, spec0: PipelineSpec,
       require(members.forall(partsOf(_) == part),
         s"compact $name: members disagree on partition layout " +
           s"(${members.map(partsOf).distinct.mkString(" vs ")})")
-      val df0c = readMembers(name, members, schema) // keeps layout cols
-      // merge-on-read: folding superseded key versions away IS the
-      // compaction (the kept rows retain their __gver — reads stay
-      // correct before and after)
-      val df = currentGenName(name)
-        .map(g => reconcileMor(name, g, df0c)).getOrElse(df0c)
+      // readMembers keeps the layout cols; merge-on-read: folding
+      // superseded key versions away IS the compaction (the kept rows
+      // retain their __gver — reads stay correct before and after)
+      val df = reconcileMor(name, gen, readMembers(name, members, schema))
       val newMembers =
         if (part.isEmpty)
           Seq(writeBatch(name,
@@ -1671,7 +1608,7 @@ final class PipelineRunner(spark: SparkSession, spec0: PipelineSpec,
         }
       // the streamids ledger carries forward via publishManifest —
       // dropping it would make appendBatch re-accept replayed batches
-      publishManifest(name, newMembers, schema.getOrElse(df.schema))
+      publishManifest(name, newMembers, schema)
     }
   } }
 
@@ -1713,11 +1650,9 @@ final class PipelineRunner(spark: SparkSession, spec0: PipelineSpec,
         catch { case _: java.io.IOException => false } // gone already
       currentGenName(name).foreach { gen0 =>
         val root = Paths.get(tablePath(name))
-        // batches referenced by ANY retained generation (the newest N,
-        // always including the live one even if ids interleave oddly)
+        // batches referenced by ANY retained generation (the newest N)
         def retained(): Seq[String] =
-          (generations(name).takeRight(keepGenerations) :+
-            currentGenName(name).getOrElse(gen0)).distinct
+          generations(name).takeRight(keepGenerations)
         def liveBatches(): Set[String] = retained()
           .flatMap(g => genManifest(name, g))
           .map(m => m.split('/').take(2).mkString("/")).toSet
@@ -1757,24 +1692,20 @@ final class PipelineRunner(spark: SparkSession, spec0: PipelineSpec,
                 retained()): Unit
           }
         }
-        // keep retained generations' manifests AND all their legacy
-        // sibling sidecars (.schema, .streamids, …) — match on the
-        // gen-name prefix; also GC quarantined legacy aborts and
-        // orphaned commit temp files. EVERYTHING here passes the
-        // cross-process age grace: a gen_ file commits atomically,
-        // but another JVM can link gen_{max+1} BETWEEN this pass's
-        // retained() snapshot and the delete loop — without the age
-        // check that freshly-committed generation (not in keepGens)
-        // would be deleted, losing the publish. In-flight
+        // keep retained generations' manifests; also GC quarantined
+        // aborts and orphaned commit temp files. EVERYTHING here
+        // passes the cross-process age grace: a gen_ file commits
+        // atomically, but another JVM can link gen_{max+1} BETWEEN
+        // this pass's retained() snapshot and the delete loop —
+        // without the age check that freshly-committed generation (not
+        // in keepGens) would be deleted, losing the publish. In-flight
         // `.committing_` temps are milliseconds old; only true crash
         // debris ages past the window.
         val keepGens = retained().toSet + gen0
-        def live(f: String) = keepGens.exists(g =>
-          f == g || f.startsWith(s"$g."))
         listDir(root)
           .filter { p =>
             val f = p.getFileName.toString
-            ((f.startsWith("gen_") && !live(f)) ||
+            ((f.startsWith("gen_") && !keepGens(f)) ||
               f.startsWith("_aborted_") ||
               (f.startsWith(".committing_") && f.endsWith(".tmp"))) &&
               oldEnough(p)
@@ -1902,59 +1833,37 @@ final class PipelineRunner(spark: SparkSession, spec0: PipelineSpec,
     */
   private def recordRunResults(command: String,
       rows: Seq[(String, String, NodeStatus)]): Unit = {
-    val items = rows.map { case (kind, name, st) =>
-      s"""{"kind":${jq(kind)},"name":${jq(name)},"status":${jq(st.label)}}"""
-    }
-    Files.writeString(Paths.get(warehouse).resolve("run_results.json"),
-      s"""{"command":${jq(command)},"results":[${items.mkString(",")}]}""")
+    import org.json4s.JsonDSL._
+    writeJson(Paths.get(warehouse).resolve("run_results.json"),
+      ("command" -> command) ~ ("results" -> rows.map {
+        case (kind, name, st) =>
+          ("kind" -> kind) ~ ("name" -> name) ~ ("status" -> st.label)
+      }))
   }
 
-  private def jq(s: String): String = "\"" + s.flatMap {
-    case '"'          => "\\\""
-    case '\\'         => "\\\\"
-    case '\n'         => "\\n"
-    case '\r'         => "\\r"
-    case '\t'         => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c            => c.toString
-  } + "\""
+  /** Every JSON artifact is written compact, fields in build order. */
+  private def writeJson(p: Path, v: JValue): Unit =
+    Files.writeString(p, JsonMethods.compact(JsonMethods.render(v)))
 
-  private def junq(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      if (s(i) == '\\' && i + 1 < s.length) {
-        i += 1
-        s(i) match {
-          case 'n' => sb += '\n'
-          case 'r' => sb += '\r'
-          case 't' => sb += '\t'
-          case 'u' => sb += Integer.parseInt(s.substring(i + 1, i + 5), 16)
-            .toChar; i += 4
-          case c => sb += c
-        }
-      } else sb += s(i)
-      i += 1
+  private def readJson(p: Path): JValue =
+    JsonMethods.parse(Files.readString(p))
+
+  private def jsonStr(obj: JValue, field: String): String =
+    obj \ field match {
+      case JString(s) => s
+      case other => sys.error(s"malformed artifact: '$field' is $other")
     }
-    sb.result()
-  }
 
   /** The last run/build's (command, (kind, name, status) rows), or
-    * None when no artifact exists. Parses only the exact shape
-    * [[recordRunResults]] emits.
+    * None when no artifact exists.
     */
   private def loadRunResults(): Option[(String, Seq[(String, String, String)])] = {
     val p = Paths.get(warehouse).resolve("run_results.json")
     if (!Files.exists(p)) None
     else {
-      val txt = Files.readString(p)
-      val cmdRe = """"command":"((?:[^"\\]|\\.)*)"""".r
-      val itemRe =
-        """\{"kind":"([^"]*)","name":"([^"]*)","status":"([^"]*)"\}""".r
-      cmdRe.findFirstMatchIn(txt).map { m =>
-        (junq(m.group(1)), itemRe.findAllMatchIn(txt)
-          .map(i => (i.group(1), i.group(2), i.group(3))).toSeq)
-      }
+      val j = readJson(p)
+      Some((jsonStr(j, "command"), (j \ "results").children.map(r =>
+        (jsonStr(r, "kind"), jsonStr(r, "name"), jsonStr(r, "status")))))
     }
   }
 
@@ -2037,24 +1946,19 @@ final class PipelineRunner(spark: SparkSession, spec0: PipelineSpec,
     * or outcome.
     */
   private def writeManifest(): Unit = {
+    import org.json4s.JsonDSL._
     val deps = resourceDeps
     val nodes = deps.keys.toSeq.sorted.map { n =>
-      val desc = byName.get(n).flatMap(_.description)
-        .map(d => s""""description":${jq(d)},""").getOrElse("")
       // schema-namespaced relations carry their parts explicitly, the
       // manifest.json shape orchestrators key relations by
-      val ns =
-        if (n.contains('.'))
-          s""""schema":${jq(n.split('.').head)},""" +
-            s""""identifier":${jq(n.split('.').last)},"""
-        else ""
-      s"""{"name":${jq(n)},"kind":${jq(resourceKind(n))},$desc$ns""" +
-        s""""deps":[${deps(n).sorted.map(jq).mkString(",")}],""" +
-        s""""checksum":${jq(checksumOf(n))}}"""
+      val ns = if (n.contains('.')) Some(n.split('.')) else None
+      ("name" -> n) ~ ("kind" -> resourceKind(n)) ~
+        ("description" -> byName.get(n).flatMap(_.description)) ~
+        ("schema" -> ns.map(_.head)) ~ ("identifier" -> ns.map(_.last)) ~
+        ("deps" -> deps(n).sorted) ~ ("checksum" -> checksumOf(n))
     }
-    Files.writeString(Paths.get(warehouse).resolve("manifest.json"),
-      s"""{"checksum_scheme":$ChecksumScheme,""" +
-        s""""nodes":[${nodes.mkString(",")}]}""")
+    writeJson(Paths.get(warehouse).resolve("manifest.json"),
+      ("checksum_scheme" -> ChecksumScheme) ~ ("nodes" -> nodes))
   }
 
   /** Write dbt's `sources.json` artifact after `source freshness`:
@@ -2065,30 +1969,29 @@ final class PipelineRunner(spark: SparkSession, spec0: PipelineSpec,
     */
   private def writeSourcesJson(command: String,
       rows: Seq[(String, String, Option[Long])]): Unit = {
-    val items = rows.map { case (name, status, loadedMs) =>
-      s"""{"name":${jq(name)},""" +
-        s""""max_loaded_at_ms":${loadedMs.map(_.toString).getOrElse("null")},""" +
-        s""""status":${jq(status)}}"""
-    }
-    Files.writeString(Paths.get(warehouse).resolve("sources.json"),
-      s"""{"command":${jq(command)},"sources":[${items.mkString(",")}]}""")
+    import org.json4s.JsonDSL._
+    writeJson(Paths.get(warehouse).resolve("sources.json"),
+      ("command" -> command) ~ ("sources" -> rows.map {
+        case (name, status, loadedMs) =>
+          ("name" -> name) ~
+            ("max_loaded_at_ms" -> loadedMs.fold[JValue](JNull)(JInt(_))) ~
+            ("status" -> status)
+      }))
   }
 
   /** name → Some(max_loaded_at_ms) | None-for-null from a dir's
-    * sources.json; None overall when no artifact exists. Parses only
-    * the exact shape [[writeSourcesJson]] emits.
+    * sources.json; None overall when no artifact exists.
     */
   private def loadSourcesJson(dir: Path): Option[Map[String, Option[Long]]] = {
     val p = dir.resolve("sources.json")
     if (!Files.exists(p)) None
-    else {
-      val itemRe =
-        """\{"name":"((?:[^"\\]|\\.)*)","max_loaded_at_ms":(null|-?\d+),""".r
-      Some(itemRe.findAllMatchIn(Files.readString(p)).map { m =>
-        junq(m.group(1)) ->
-          (if (m.group(2) == "null") None else Some(m.group(2).toLong))
-      }.toMap)
-    }
+    else Some((readJson(p) \ "sources").children.map { s =>
+      jsonStr(s, "name") -> (s \ "max_loaded_at_ms" match {
+        case JInt(t) => Some(t.toLong)
+        case JNull => None
+        case other => sys.error(s"malformed sources.json: $other")
+      })
+    }.toMap)
   }
 
   /** (checksum scheme, name → checksum) from a `--state` dir's
@@ -2098,17 +2001,13 @@ final class PipelineRunner(spark: SparkSession, spec0: PipelineSpec,
   private def loadManifestChecksums(dir: Path): (Int, Map[String, String]) = {
     val p = dir.resolve("manifest.json")
     require(Files.exists(p), s"--state: no manifest.json under $dir")
-    val text = Files.readString(p)
-    val scheme = """"checksum_scheme":(\d+)""".r
-      .findFirstMatchIn(text).map(_.group(1).toInt).getOrElse(1)
-    // lazy .*? (not [^}]*?): a description containing '}' must not
-    // break the name→checksum pairing; checksum is always the last
-    // field of a node, so the lazy scan cannot cross into the next
-    val itemRe =
-      """"name":"((?:[^"\\]|\\.)*)",.*?"checksum":"([a-f0-9]+)"""".r
-    (scheme,
-      itemRe.findAllMatchIn(text)
-        .map(m => junq(m.group(1)) -> m.group(2)).toMap)
+    val j = readJson(p)
+    val scheme = j \ "checksum_scheme" match {
+      case JInt(v) => v.toInt
+      case _ => 1
+    }
+    (scheme, (j \ "nodes").children
+      .map(n => jsonStr(n, "name") -> jsonStr(n, "checksum")).toMap)
   }
 
   /** Resolve a model's inputs: sources (temp views already registered)
@@ -2257,12 +2156,10 @@ final class PipelineRunner(spark: SparkSession, spec0: PipelineSpec,
     */
   private def cloneTable(st: PipelineRunner, name: String): Long =
     lockFor(name).synchronized { tracked {
-      val srcMembers = st.currentManifest(name).getOrElse(
+      val gen = st.currentGenName(name).getOrElse(
         sys.error(s"clone: $name has no committed generation in state"))
-      // fail loudly rather than publish an empty schema — readTable
-      // of a '#schema:<empty struct>' generation returns 0-column rows
-      val schema = st.currentSchema(name).getOrElse(sys.error(
-        s"clone: $name has no stored schema in state (legacy layout?)"))
+      val srcMembers = st.genManifest(name, gen)
+      val schema = st.genSchema(name, gen)
       def copyRec(from: Path, to: Path): Unit = {
         import scala.jdk.CollectionConverters._
         val s = Files.walk(from)
@@ -2591,7 +2488,7 @@ final class PipelineRunner(spark: SparkSession, spec0: PipelineSpec,
           // an O(table) scan per scheduled run. A null hwm (empty
           // table / all-null ts) means "nothing loaded yet" → append
           // everything, not nothing.
-          val hwm = readMembers(name, Seq(cur0.last), currentSchema(name))
+          val hwm = readMembers(name, Seq(cur0.last), currentSchema(name).get)
             .agg(max(col(tsCol))).head().get(0)
           val delta = if (hwm == null) batchDf
             else batchDf.filter(col(tsCol) > lit(hwm))
@@ -2989,7 +2886,7 @@ final class PipelineRunner(spark: SparkSession, spec0: PipelineSpec,
           val newKeys = spark.read.schema(evolved)
             .parquet(s"${tablePath(name)}/$newBatch")
             .select(keys.map(col): _*)
-          val carry = readMembers(name, touchedM, Some(stored))
+          val carry = readMembers(name, touchedM, stored)
             .join(newKeys, keys, "left_anti")
           writePartitioned(carry)._2
         }
@@ -3076,32 +2973,35 @@ final class PipelineRunner(spark: SparkSession, spec0: PipelineSpec,
           .filter(_.endsWith(s"$OpenCol=true"))
         // all keys hard-deleted leaves a generation with no open member
         if (openM.isEmpty) None
-        else Some(readMembers(sn.name, openM, currentSchema(sn.name))
+        else Some(readMembers(sn.name, openM, currentSchema(sn.name).get)
           .drop(OpenCol))
       }
+    // dbt `check_cols: all` — track every non-key source column,
+    // resolved against the live schema (guarded against the stored
+    // one below)
+    val compareCols =
+      if (sn.compareCols == Seq("all"))
+        source.columns.toSeq.filterNot(sn.keyCols.contains)
+      else sn.compareCols
     // Snapshot history is append-only: closed rows are never
-    // rewritten, so a source schema change cannot be absorbed — fail
-    // loudly with the diff instead of crashing later inside the
-    // SCD2 join/union with an unresolved-column error.
+    // rewritten, so a change to the TRACKED columns (key + compare —
+    // all the SCD2 step stores) cannot be absorbed — fail loudly with
+    // the diff instead of crashing later inside the SCD2 join/union
+    // with an unresolved-column error. Untracked source columns are
+    // not stored, so they may come and go.
     prevOpen.foreach { po =>
       // engine-added columns (SCD2 validity range, the
       // hard_deletes=new_record deletion flag) are not source shape
       val stored = po.columns.toSet --
         Set("valid_from", "valid_to", Snapshot.DeletedCol)
-      val live = source.columns.toSet
+      val live = (sn.keyCols ++ compareCols).toSet
+        .filter(source.columns.contains)
       if (stored != live) sys.error(
         s"snapshot ${sn.name}: source schema changed (stored: " +
           s"${stored.toSeq.sorted.mkString(",")}; live: " +
           s"${live.toSeq.sorted.mkString(",")}) — snapshot history " +
           "is append-only; declare a new snapshot for the new shape")
     }
-    // dbt `check_cols: all` — track every non-key source column,
-    // resolved against the live schema (guarded identical to the
-    // stored one above)
-    val compareCols =
-      if (sn.compareCols == Seq("all"))
-        source.columns.toSeq.filterNot(sn.keyCols.contains)
-      else sn.compareCols
     val (closedDelta, nextOpen) = sn.strategy match {
       case SnapshotStrategy.Check =>
         Snapshot.scd2Step(prevOpen, source, sn.keyCols, compareCols,
@@ -3276,59 +3176,32 @@ final class PipelineRunner(spark: SparkSession, spec0: PipelineSpec,
     * practice; nested collections are rejected loudly). Values render
     * to their Jinja substitution text: strings bare (unescaped),
     * numbers and booleans verbatim — the model text supplies SQL
-    * quoting, exactly as in a dbt model file.
+    * quoting, exactly as in a dbt model file. Decimals parse as
+    * BigDecimal so `1.50` keeps its scale; anything after the object
+    * is malformed input, not ignored.
     */
   private def parseVarsJson(s: String): Map[String, String] = {
-    val t = s.trim
-    require(t.length >= 2 && t.head == '{' && t.last == '}',
-      s"--vars expects a JSON object, got: $s")
-    val end = t.length - 1
-    var i = 1
-    val out = mutable.Map.empty[String, String]
-    def skipWs(): Unit = while (i < end && t(i).isWhitespace) i += 1
-    def parseString(): String = {
-      require(i < end && t(i) == '"',
-        s"--vars: expected a \"quoted\" token at offset $i in $s")
-      i += 1
-      val sb = new StringBuilder
-      while (i < end && t(i) != '"') {
-        if (t(i) == '\\' && i + 1 < end) {
-          i += 1
-          sb += (t(i) match {
-            case 'n' => '\n'
-            case 't' => '\t'
-            case c   => c
-          })
-        } else sb += t(i)
-        i += 1
-      }
-      require(i < end, s"--vars: unterminated string in $s")
-      i += 1
-      sb.result()
+    import com.fasterxml.jackson.databind.DeserializationFeature._
+    val fields = scala.util.Try(JsonMethods.mapper.readerFor(classOf[JValue])
+      .`with`(USE_BIG_DECIMAL_FOR_FLOATS, FAIL_ON_TRAILING_TOKENS)
+      .readValue[JValue](s)) match {
+      case scala.util.Success(JObject(fs)) => fs
+      case scala.util.Success(_) =>
+        sys.error(s"--vars expects a JSON object, got: $s")
+      case scala.util.Failure(e) =>
+        sys.error(s"--vars: malformed JSON (${e.getMessage}): $s")
     }
-    skipWs()
-    while (i < end) {
-      val k = parseString()
-      skipWs()
-      require(i < end && t(i) == ':', s"--vars: expected ':' after $k")
-      i += 1; skipWs()
-      val v =
-        if (i < end && t(i) == '"') parseString() // any quoted string is
-          // a legal scalar — "", "[a-z]+", "{x}" included (dbt accepts
-          // them; the scalar check below applies to UNQUOTED tokens only)
-        else {
-          val j = i
-          while (i < end && t(i) != ',' && !t(i).isWhitespace) i += 1
-          val raw = t.substring(j, i)
-          require(raw.nonEmpty && !raw.startsWith("{") && !raw.startsWith("["),
-            s"--vars: value for $k must be a scalar (got '$raw')")
-          raw
-        }
-      out(k) = v
-      skipWs()
-      if (i < end && t(i) == ',') { i += 1; skipWs() }
-    }
-    out.toMap
+    fields.map { case (k, v) =>
+      k -> (v match {
+        case JString(x) => x
+        case JInt(n) => n.toString
+        case JDecimal(d) => d.toString
+        case JBool(b) => b.toString
+        case JNull => "null"
+        case _ => sys.error(
+          s"--vars: value for $k must be a scalar (got ${JsonMethods.compact(v)})")
+      })
+    }.toMap
   }
 
   /** argv tokenization with single-quote spans, so
@@ -4323,13 +4196,13 @@ final class PipelineRunner(spark: SparkSession, spec0: PipelineSpec,
           val names = topoOrderIn(deps, selectIn(deps, sel))
             .filter(tableExists)
           val counts = mutable.Map.empty[String, Long]
+          import org.json4s.JsonDSL._
           val entries = names.map { n =>
             val schema = currentSchema(n).getOrElse(StructType(Nil))
-            val cols = schema.fields.filterNot(f =>
+            val cols = schema.fields.toSeq.filterNot(f =>
               hiddenCols.contains(f.name)).zipWithIndex.map {
               case (f, i) =>
-                s"""{"name":${jq(f.name)},"type":${jq(f.dataType.sql)},""" +
-                  s""""index":$i}"""
+                ("name" -> f.name) ~ ("type" -> f.dataType.sql) ~ ("index" -> i)
             }
             val members = currentManifest(n).getOrElse(Nil)
             val bytes = members.map { m =>
@@ -4343,16 +4216,14 @@ final class PipelineRunner(spark: SparkSession, spec0: PipelineSpec,
             }.sum
             val rows = readTable(n).count()
             counts(n) = rows
-            val desc = byName.get(n).flatMap(_.description)
-              .map(d => s""""description":${jq(d)},""").getOrElse("")
-            s"""{"name":${jq(n)},"kind":${jq(resourceKind(n))},$desc""" +
-              s""""columns":[${cols.mkString(",")}],""" +
-              s""""stats":{"row_count":$rows,"bytes":$bytes}}"""
+            ("name" -> n) ~ ("kind" -> resourceKind(n)) ~
+              ("description" -> byName.get(n).flatMap(_.description)) ~
+              ("columns" -> cols) ~
+              ("stats" -> (("row_count" -> rows) ~ ("bytes" -> bytes)))
           }
           val outDir = Paths.get(warehouse, "target")
           Files.createDirectories(outDir)
-          Files.writeString(outDir.resolve("catalog.json"),
-            s"""{"nodes":[${entries.mkString(",")}]}""")
+          writeJson(outDir.resolve("catalog.json"), "nodes" -> entries)
           logger.log(LogLevel.INFO,
             s"catalog: ${names.size} relations -> $outDir/catalog.json")
           CommandResult(command, success = true, names, counts.toMap, None)

@@ -799,6 +799,11 @@ class PipelineRunnerSpec extends AnyFunSuite with SparkTestBase {
     // an intact generation set is left alone
     assert(r2.quarantineClobberedGens("qt", gen1Batches,
       Seq("gen_2")).isEmpty)
+    // vacuum GCs the quarantined abort; the table stays readable
+    r2.vacuum("qt", minAgeMs = 0L)
+    assert(!java.nio.file.Files.exists(root.resolve("_aborted_gen_3")))
+    assert(r2.readTable("qt").as[(Long, String)].collect()
+      .toSeq == Seq((1L, "v2")))
   }
 
   test("SQL-text models: {{ ref }}/{{ source }} resolve through spark.sql") {
@@ -1063,6 +1068,12 @@ class PipelineRunnerSpec extends AnyFunSuite with SparkTestBase {
     assert(!r.runCommand("""run --vars '{"k": {"nested": 1}}'""").success)
     assert(!r.runCommand("run --vars '{\"k\": 1}").success) // unterminated
     assert(!r.runCommand("run --vars notjson").success)
+    // malformed JSON fails loudly instead of being half-read
+    for (bad <- Seq("""{"a": 1 "b": 2}""", """{"a": tru}""")) {
+      val res = r.runCommand(s"run --vars '$bad'")
+      assert(!res.success && res.error.exists(_.contains("--vars")),
+        s"$bad: $res")
+    }
   }
 
   test("project artifact round-trip: pack → zip → load → run") {
@@ -2043,39 +2054,6 @@ class PipelineRunnerSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("legacy _CURRENT warehouse: pointer honored, aborted gen quarantined") {
-    val w = wh()
-    // commit gen_1 normally, then hand-craft the legacy layout: a
-    // _CURRENT pointer at gen_1 plus a TORN gen_2 left by a crashed
-    // legacy publisher (manifest written non-atomically, pointer
-    // never flipped — an uncommitted publish)
-    assert(new PipelineRunner(spark,
-      PipelineSpec(Seq(tableModel("leg", Seq((1L, "old"))))), w)
-      .run(Seq("run")).success)
-    val root = java.nio.file.Paths.get(w, "leg")
-    java.nio.file.Files.writeString(root.resolve("_CURRENT"), "gen_1")
-    java.nio.file.Files.writeString(root.resolve("gen_2"), "")
-    // readers must honor the pointer: the torn gen_2 is NOT live
-    val r = new PipelineRunner(spark,
-      PipelineSpec(Seq(tableModel("leg", Seq((2L, "new"))))), w)
-    assert(r.readTable("leg").as[(Long, String)].collect().toSeq ==
-      Seq((1L, "old")))
-    // the next publish migrates: quarantines gen_2, drops the
-    // pointer, commits under the new protocol
-    assert(r.run(Seq("run")).success)
-    assert(!java.nio.file.Files.exists(root.resolve("_CURRENT")))
-    assert(java.nio.file.Files.exists(root.resolve("_aborted_gen_2")))
-    assert(r.readTable("leg").as[(Long, String)].collect().toSeq ==
-      Seq((2L, "new")))
-    // the superseded real generation stays time-travelable
-    assert(r.readTableAt("leg", "gen_1").as[(Long, String)]
-      .collect().toSeq == Seq((1L, "old")))
-    // vacuum GCs the quarantined abort
-    r.vacuum("leg", keepGenerations = 2, minAgeMs = 0L)
-    assert(!java.nio.file.Files.exists(root.resolve("_aborted_gen_2")))
-    assert(r.readTableAt("leg", "gen_1").count() == 1)
-  }
-
   test("is_incremental()/{{ this }}: guard flips across runs and full-refresh") {
     val w = wh()
     val srcDir = wh() + "/src"
@@ -2381,6 +2359,12 @@ class PipelineRunnerSpec extends AnyFunSuite with SparkTestBase {
     val row = r.readTable("vq_m").head()
     assert(row.getString(0) == "[a-z]+" && row.getString(1) == "" &&
       row.getString(2) == "{x}")
+    // JSON string escapes decode in full: \u0041 is A, \r a carriage
+    // return
+    assert(r.runCommand("run --vars '{\"pat\": \"\\u0041\", " +
+      "\"empty\": \"a\\rb\", \"obj\": \"\"}'").success)
+    val row2 = r.readTable("vq_m").head()
+    assert(row2.getString(0) == "A" && row2.getString(1) == "a\rb")
     // unquoted tokens keep the scalar guard
     assert(!r.runCommand("""run --vars '{"k": {"nested": 1}}'""").success)
   }
@@ -3468,6 +3452,28 @@ class PipelineRunnerSpec extends AnyFunSuite with SparkTestBase {
     val p = r2.runCommand("parse")
     assert(p.success && p.modelsRun == Seq("doc_m"))
     assert(r2.generations("doc_m").size == 2, "parse must not build")
+    // JSON escaping: quote, backslash, newline, brace, non-ASCII all
+    // round-trip through both artifacts and the state:modified diff
+    val tricky = "say \"hi\" to C:\\tmp\nline two } — ünïcödé"
+    val w3 = wh()
+    val state3 = wh()
+    val r3 = new PipelineRunner(spark, spec(tricky), w3)
+    assert(r3.run(Seq("run", "docs generate")).success)
+    def descOf(path: java.nio.file.Path): List[org.json4s.JValue] =
+      (org.json4s.jackson.JsonMethods.parse(
+        java.nio.file.Files.readString(path)) \ "nodes").children
+        .filter(_ \ "name" == org.json4s.JString("doc_m"))
+        .map(_ \ "description")
+    assert(descOf(java.nio.file.Paths.get(w3, "manifest.json")) ==
+      List(org.json4s.JString(tricky)))
+    assert(descOf(java.nio.file.Paths.get(w3, "target", "catalog.json")) ==
+      List(org.json4s.JString(tricky)))
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get(w3, "manifest.json"),
+      java.nio.file.Paths.get(state3, "manifest.json"))
+    assert(new PipelineRunner(spark, spec(tricky), w3)
+      .runCommand(s"run -s state:modified --state $state3")
+      .modelsRun.isEmpty)
   }
 
   test("project artifacts: description config parses into the model") {

@@ -315,4 +315,37 @@ class SnapshotSpec extends AnyFunSuite with SparkTestBase {
     assert(o5.head.getAs[java.sql.Timestamp]("valid_from")
       == ts("2024-04-20 00:00:00"))
   }
+
+  test("runner snapshot: an untracked source column is not schema " +
+      "drift; dropping a tracked column still fails with the diff") {
+    import graft.pipeline._
+    val w = java.nio.file.Files.createTempDirectory("snapshot_wh").toString
+    def runner(rows: => DataFrame) = new PipelineRunner(spark,
+      PipelineSpec(
+        models = Seq(Model("sc_src", Nil, Materialization.Table,
+          (_, _) => rows)),
+        snapshots = Seq(SnapshotDef("sc_snap", "sc_src", Seq("id"),
+          Seq("v")))), w)
+    // check_cols = [v]: the stored open rows hold id, v — never extra
+    assert(runner(Seq((1L, "a", 7L), (2L, "b", 8L)).toDF("id", "v", "extra"))
+      .run(Seq("run", "snapshot --at 2024-01-01T00:00:00")).success)
+    val r2 = runner(Seq((1L, "a2", 9L), (2L, "b", 8L))
+      .toDF("id", "v", "extra"))
+    assert(r2.runCommand("run").success)
+    val res2 = r2.runCommand("snapshot --at 2024-02-01T00:00:00")
+    assert(res2.success, res2.error)
+    val snap = r2.readTable("sc_snap")
+    assert(snap.columns.toSet == Set("id", "v", "valid_from", "valid_to"))
+    assert(openRows(snap).orderBy("id").select("id", "v").as[(Long, String)]
+      .collect().toSeq == Seq((1L, "a2"), (2L, "b")))
+    assert(snap.count() == 3) // key 1 closed and reopened
+    // the tracked column v vanishes from the source: history cannot
+    // absorb that — loud failure naming both shapes
+    val r3 = runner(Seq((1L, 9L)).toDF("id", "extra"))
+    assert(r3.runCommand("run").success)
+    val res3 = r3.runCommand("snapshot --at 2024-03-01T00:00:00")
+    assert(!res3.success)
+    assert(res3.error.exists(e => e.contains("source schema changed") &&
+      e.contains("stored: id,v; live: id)")), res3.error)
+  }
 }

@@ -4,6 +4,9 @@
 # 6-7 shipped an uncompilable tree and burned two driver rounds on it;
 # this script makes that impossible to repeat silently.
 #
+# It also runs the benchmark harness self-tests (perfbench/tests), so a
+# tree that breaks the harness fails here too.
+#
 # Usage: tools/preflight.sh        (from anywhere; exits nonzero on any
 #                                   compile error or test failure)
 set -euo pipefail
@@ -15,4 +18,7 @@ sbt -batch Test/compile
 echo "[preflight] sbt test ..."
 sbt -batch test
 
-echo "[preflight] OK — tree compiles and all tests pass"
+echo "[preflight] perfbench harness self-tests ..."
+python3 -m unittest discover -s perfbench/tests
+
+echo "[preflight] OK — tree compiles, all tests and harness self-tests pass"
