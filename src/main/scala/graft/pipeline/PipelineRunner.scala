@@ -16,10 +16,13 @@ object LogLevel extends Enumeration {
 }
 
 final class PipelineLogger(threshold: LogLevel.Value = LogLevel.WARNING) {
-  val lines: mutable.Buffer[(LogLevel.Value, String)] = mutable.Buffer.empty
+  // appended to from pool threads (`run --threads N`, concurrent tests)
+  private val buf = mutable.ArrayBuffer.empty[(LogLevel.Value, String)]
+  /** A snapshot of the lines logged so far. */
+  def lines: Seq[(LogLevel.Value, String)] = buf.synchronized(buf.toVector)
   def log(level: LogLevel.Value, msg: String): Unit =
     if (level >= threshold && threshold != LogLevel.SILENT) {
-      lines += ((level, msg))
+      buf.synchronized(buf += ((level, msg)))
       if (level >= LogLevel.WARNING) System.err.println(s"[$level] $msg")
     }
 }
@@ -187,8 +190,8 @@ final class PipelineRunner(spark: SparkSession, spec0: PipelineSpec,
     resolveDep)
 
   private var initialized = false
-  // concurrent: models in the same dependency level may build in
-  // parallel under `run --threads N`
+  // concurrent: models with no dependency path between them may build
+  // in parallel under `run --threads N`
   private val ephemeralCache =
     scala.collection.concurrent.TrieMap.empty[String, DataFrame]
 
@@ -918,9 +921,9 @@ final class PipelineRunner(spark: SparkSession, spec0: PipelineSpec,
 
   /** Batches staged by writeBatch but not yet referenced by a
     * committed manifest. Vacuum must skip them: under `run --threads
-    * N` a sibling model can be between its batch write and its
-    * publish, and deleting that batch would commit a generation
-    * pointing at missing data.
+    * N` (and concurrent `test` audit writes) another node can be
+    * between its batch write and its publish, and deleting that batch
+    * would commit a generation pointing at missing data.
     */
   private val stagedBatches =
     java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
@@ -1753,39 +1756,26 @@ final class PipelineRunner(spark: SparkSession, spec0: PipelineSpec,
     * its transitive selected descendants `skipped` while independent
     * subgraphs keep running (dbt `run` semantics — a run never stops
     * the world, so `retry` has a precise failed/skipped frontier to
-    * resume from). Serial, or level-parallel under `--threads N`:
-    * each level settles FULLY before the next starts — returning at
-    * the first failure would let sibling futures publish AFTER the
-    * command already reported, and a model whose dep failed in an
-    * earlier level is skipped without occupying a pool slot.
+    * resume from). Serial, or dependency-ready under `--threads N`:
+    * each model starts as soon as its last selected dep has settled
+    * (see [[runReady]]).
     */
   private def runModels(names: Seq[String], threads: Int,
       fullRefresh: Boolean, failFast: Boolean = false)
       : Seq[(String, NodeStatus)] = {
-    val selected = names.toSet
-    val status = mutable.Map.empty[String, NodeStatus]
     // dbt --fail-fast: after ANY failure, no further node STARTS —
     // everything unstarted is marked skipped (vs the default, where
     // only descendants skip and independent subgraphs keep running).
-    // The flag is an AtomicBoolean because under --threads N the
-    // check happens at TASK start on pool threads (a queued future
-    // whose level-mate already failed must skip, not run — the level
-    // submits all its futures up front), while `status` is only ever
-    // written on the scheduler thread.
+    // Checked at TASK start on pool threads: a queued model submitted
+    // before the failure must skip, not run.
     val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    def anyFailed = failFast && failed.get()
-    // version-RESOLVED deps: selected holds resolved instance names
+    // version-RESOLVED deps: names holds resolved instance names
     // (dim_v2), so a bare ref('dim') must map to dim_v2 here or a
     // failed dim_v2 would not skip its consumers (stale reads).
     val rdeps = modelDeps
-    def shouldSkip(n: String) = anyFailed ||
-      rdeps(n).exists(d =>
-        selected(d) && (status.get(d) match {
-          case Some(_: NodeStatus.Failed) | Some(NodeStatus.Skipped) => true
-          case _ => false
-        }))
+    val index = names.zipWithIndex.toMap
     def runOne(n: String): NodeStatus =
-      if (anyFailed) {
+      if (failFast && failed.get()) {
         logger.log(LogLevel.WARNING, s"run: skipping $n (--fail-fast)")
         NodeStatus.Skipped
       } else
@@ -1796,31 +1786,76 @@ final class PipelineRunner(spark: SparkSession, spec0: PipelineSpec,
             failed.set(true)
             NodeStatus.Failed(String.valueOf(e.getMessage))
         }
-    if (threads <= 1)
-      names.foreach(n =>
-        status(n) = if (shouldSkip(n)) NodeStatus.Skipped else runOne(n))
+    names.zip(runReady(names.size,
+      i => rdeps(names(i)).flatMap(index.get), threads)(
+      i => runOne(names(i))))
+  }
+
+  /** The dependency-ready scheduler behind `run --threads N` and
+    * `test`: node `i` (0 until n, topo-ordered: `deps(i)` are all
+    * < i) is submitted to a pool of `threads` the moment its last dep
+    * has settled, so a slow node holds back only its own descendants.
+    * A node with a failed or skipped dep settles `Skipped` without
+    * taking a pool slot. Every started node settles before this
+    * returns — returning early would let a sibling publish AFTER the
+    * command reported. With one thread (or one node) everything runs
+    * on the caller's thread, in order. `run` must not throw an
+    * Exception (callers capture per-node errors); an Error stops new
+    * submissions and is rethrown once the in-flight nodes settle.
+    * Returns the statuses in index order.
+    */
+  private def runReady(n: Int, deps: Int => Seq[Int], threads: Int)(
+      run: Int => NodeStatus): IndexedSeq[NodeStatus] = {
+    val status = new Array[NodeStatus](n)
+    val edges = IndexedSeq.tabulate(n)(deps(_).distinct)
+    def blocked(i: Int) = edges(i).exists(d => status(d) match {
+      case _: NodeStatus.Failed | NodeStatus.Skipped => true
+      case _ => false
+    })
+    val poolSize = threads min n
+    if (poolSize <= 1)
+      for (i <- 0 until n)
+        status(i) = if (blocked(i)) NodeStatus.Skipped else run(i)
     else {
-      val level = mutable.Map.empty[String, Int]
-      names.foreach { n => // names are topo-ordered, deps resolved first
-        val depLevels = rdeps(n).filter(selected).map(level)
-        level(n) = (if (depLevels.isEmpty) -1 else depLevels.max) + 1
+      // only this (the calling) thread touches status / waiting
+      val children = Array.fill(n)(mutable.Buffer.empty[Int])
+      for (i <- 0 until n; d <- edges(i)) children(d) += i
+      val waiting = Array.tabulate(n)(edges(_).size)
+      val settled = new java.util.concurrent.LinkedBlockingQueue[
+        (Int, Either[Throwable, NodeStatus])]()
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(poolSize)
+      var inFlight = 0
+      var fatal: Option[Throwable] = None
+      def ready(i: Int): Unit =
+        if (blocked(i)) settle(i, NodeStatus.Skipped)
+        else if (fatal.isEmpty) {
+          inFlight += 1
+          pool.execute { () =>
+            val st = try Right(run(i)) catch { case e: Throwable => Left(e) }
+            settled.put(i -> st)
+          }
+        }
+      def settle(i: Int, st: NodeStatus): Unit = {
+        status(i) = st
+        children(i).foreach { c =>
+          waiting(c) -= 1
+          if (waiting(c) == 0) ready(c)
+        }
       }
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      try names.groupBy(level).toSeq.sortBy(_._1).foreach { case (_, lvl) =>
-        val (skips, runs) = lvl.partition(shouldSkip)
-        skips.foreach(status(_) = NodeStatus.Skipped)
-        val running = runs.map(n =>
-          scala.concurrent.Future(n -> runOne(n))) // runOne never throws
-        running.foreach { f =>
-          val (n, st) = scala.concurrent.Await.result(f,
-            scala.concurrent.duration.Duration.Inf)
-          status(n) = st
+      try {
+        (0 until n).filter(waiting(_) == 0).foreach(ready)
+        while (inFlight > 0) {
+          val (i, st) = settled.take()
+          inFlight -= 1
+          settle(i, st.fold({ e =>
+            fatal = fatal.orElse(Some(e))
+            NodeStatus.Failed(String.valueOf(e.getMessage))
+          }, identity))
         }
       } finally pool.shutdown()
+      fatal.foreach(throw _)
     }
-    names.map(n => n -> status(n))
+    status.toIndexedSeq
   }
 
   /** Write dbt's run_results artifact: the command verbatim plus one
@@ -3532,30 +3567,38 @@ final class PipelineRunner(spark: SparkSession, spec0: PipelineSpec,
           s"; skipped: ${skipped.sorted.mkString(",")}" else "")))
   }
 
-  /** The `test` command body (also `retry` of a test): run each chosen
-    * test under its config, catching per-test errors (dbt's "error"
-    * test status) so one broken test never aborts the rest, and record
-    * the artifact under the ORIGINAL command for retry-of-retry.
+  /** The `test` command body (also `retry` of a test): run the chosen
+    * data tests concurrently on the session's cores (they are
+    * independent reads; each `store_failures` audit table is its own),
+    * each under its config, catching per-test errors (dbt's "error"
+    * test status) so one broken test never aborts the rest, then the
+    * unit tests; record the artifact, in spec order, under the
+    * ORIGINAL command for retry-of-retry.
     */
   private def runTestsCommand(command: String, recordAs: String,
       chosen: Seq[DataTest], units: Seq[UnitTest] = Nil,
       storeAll: Boolean = false): CommandResult = {
-    val outcomes = chosen.map { t =>
-      val ok =
+    def status(ok: Boolean): NodeStatus =
+      if (ok) NodeStatus.Success(0) else NodeStatus.Failed("")
+    val tested = runReady(chosen.size, _ => Nil,
+      spark.sparkContext.defaultParallelism) { i =>
+      val t = chosen(i)
+      status(
         try runTest(t, storeAll)._1.isEmpty
         catch {
           case e: Exception =>
             logger.log(LogLevel.ERROR,
               s"test ${t.name} errored: ${e.getMessage}")
             false
-        }
-      ("test", t.name, ok)
-    } ++ runUnitTests(units).map { case (n, ok) => ("unit_test", n, ok) }
-    recordRunResults(recordAs, outcomes.map { case (kind, n, ok) =>
-      (kind, n,
-        if (ok) NodeStatus.Success(0): NodeStatus else NodeStatus.Failed(""))
-    })
-    val failures = outcomes.collect { case (_, n, false) => n }
+        })
+    }
+    val outcomes = chosen.zip(tested).map { case (t, st) =>
+      ("test", t.name, st)
+    } ++ runUnitTests(units).map { case (n, ok) =>
+      ("unit_test", n, status(ok))
+    }
+    recordRunResults(recordAs, outcomes)
+    val failures = outcomes.collect { case (_, n, _: NodeStatus.Failed) => n }
     CommandResult(command, failures.isEmpty, outcomes.map(_._2), Map.empty,
       if (failures.isEmpty) None
       else Some(s"failing tests: ${failures.mkString(",")}"))
@@ -3821,7 +3864,8 @@ final class PipelineRunner(spark: SparkSession, spec0: PipelineSpec,
     * [--full-refresh] [--vars json] [--event-time-start ts]
     * [--event-time-end ts]" (the event-time flags drive microbatch
     * windows), "test [--select ...] [--exclude ...] [--warn-error]"
-    * (--warn-error promotes warn outcomes to failures, also accepted
+    * (runs its data tests concurrently on the session's cores;
+    * --warn-error promotes warn outcomes to failures, also accepted
     * on build and source freshness),
     * "seed", "snapshot --at <ts>", "source freshness --at <ts>",
     * "build [--select ...] [--exclude ...] [--full-refresh] [--at ts]",

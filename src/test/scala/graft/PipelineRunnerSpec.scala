@@ -375,6 +375,51 @@ class PipelineRunnerSpec extends AnyFunSuite with SparkTestBase {
     assert(!r.tableExists("f_down"), "downstream of failure must not build")
   }
 
+  test("run --threads starts a model once its own deps settle, not its level") {
+    // slow and fast start together; after_fast depends only on fast,
+    // so it must be built and published while slow is still building
+    var r: PipelineRunner = null
+    val startedAt = new java.util.concurrent.ConcurrentHashMap[String, Long]()
+    @volatile var slowReturnedAt = 0L
+    @volatile var afterFastAtSlowReturn = false
+    val spec = PipelineSpec(Seq(
+      Model("slow", Nil, Materialization.Table,
+        (sp, _) => { import sp.implicits._
+          startedAt.put("slow", System.nanoTime())
+          Thread.sleep(1500)
+          afterFastAtSlowReturn = r.tableExists("after_fast")
+          slowReturnedAt = System.nanoTime()
+          Seq((1L, "slow")).toDF("id", "v") }),
+      Model("fast", Nil, Materialization.Table,
+        (sp, _) => { import sp.implicits._
+          startedAt.put("fast", System.nanoTime())
+          Seq((1L, "fast")).toDF("id", "v") }),
+      Model("after_fast", Seq("fast"), Materialization.Table,
+        (_, in) => { startedAt.put("after_fast", System.nanoTime())
+          in("fast") })))
+    r = new PipelineRunner(spark, spec, wh())
+    assert(r.run(Seq("run --threads 2")).success)
+    assert(startedAt.get("after_fast") < slowReturnedAt,
+      "after_fast must start while slow is still building")
+    assert(afterFastAtSlowReturn,
+      "after_fast must be published before slow's build returns")
+    assert(r.readTable("after_fast").as[(Long, String)].collect().toSeq ==
+      Seq((1L, "fast")))
+  }
+
+  test("PipelineLogger keeps every line logged from concurrent threads") {
+    val logger = new PipelineLogger(LogLevel.DEBUG)
+    val threads = (0 until 8).map { t =>
+      new Thread(() => (0 until 1000).foreach(i =>
+        logger.log(LogLevel.INFO, s"t$t line $i")))
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    val logged = logger.lines.map(_._2)
+    val (n, distinct) = (logged.size, logged.toSet.size)
+    assert(n == 8000 && distinct == 8000)
+  }
+
   test("time travel: superseded generations stay readable until vacuum") {
     val w = wh()
     def spec(v: String) = PipelineSpec(Seq(tableModel("tt", Seq((1L, v)))))
@@ -2607,6 +2652,61 @@ class PipelineRunnerSpec extends AnyFunSuite with SparkTestBase {
     val r2 = new PipelineRunner(spark, spec(Seq((1L, "ok"))), w)
     assert(r2.run(Seq("build")).success)
     assert(r2.readTable(audit).count() == 0)
+  }
+
+  test("test runs its data tests concurrently; outcomes, artifact and " +
+      "retry stay in spec order") {
+    val (w, ref) = (wh(), wh())
+    val parent = Model("ct_parent", Nil, Materialization.Table,
+      (sp, _) => { import sp.implicits._; Seq(1L, 2L, 3L).toDF("id") })
+    val m = Model("ct_m", Nil, Materialization.Table,
+      (sp, _) => { import sp.implicits._
+        Seq((1L, "a", 1L, "x", "n1"), (2L, "b", 2L, "y", null),
+          (3L, "c", 3L, "y", "n3")).toDF("id", "v", "pid", "grp", "note") })
+    val tests = Seq(
+      DataTest.Unique("ct_m", Seq("id")),
+      DataTest.NotNull("ct_m", "note"),                  // fails: id 2
+      DataTest.AcceptedValues("ct_m", "v", Seq("a", "b", "c")),
+      DataTest.Relationships("ct_m", "pid", "ct_parent", "id"),
+      DataTest.NotNull("ct_m", "no_such_col"),           // errors
+      DataTest.Singular("ct_nonneg",
+        "SELECT * FROM {{ ref('ct_m') }} WHERE id < 0"),
+      DataTest.AcceptedValues("ct_m", "grp", Seq("x"),   // warns, stored
+        TestConfig(severity = Severity.Warn, storeFailures = true)),
+      DataTest.NotNull("ct_parent", "id"))
+    def spec(ts: Seq[DataTest]) = PipelineSpec(Seq(parent, m), tests = ts)
+    def runResults(dir: String): Seq[(String, String, String)] = {
+      import org.json4s._
+      val js = org.json4s.jackson.JsonMethods.parse(
+        java.nio.file.Files.readString(
+          java.nio.file.Paths.get(dir, "run_results.json")))
+      (js \ "results").children.map { row =>
+        def f(k: String) = (row \ k).asInstanceOf[JString].s
+        (f("kind"), f("name"), f("status"))
+      }
+    }
+    Seq(w, ref).foreach(d =>
+      assert(new PipelineRunner(spark, spec(Nil), d).run(Seq("run")).success))
+    // one-at-a-time reference: each test alone in its own command
+    val reference = tests.flatMap { t =>
+      new PipelineRunner(spark, spec(Seq(t)), ref).runCommand("test")
+      runResults(ref)
+    }
+    val failing = Seq("not_null_ct_m_note", "not_null_ct_m_no_such_col")
+    assert(reference.collect { case (_, n, "failed") => n } == failing)
+
+    val r = new PipelineRunner(spark, spec(tests), w)
+    val res = r.runCommand("test")
+    assert(!res.success)
+    assert(res.error.contains(s"failing tests: ${failing.mkString(",")}"))
+    assert(res.modelsRun == tests.map(_.name), "every test ran")
+    assert(runResults(w) == reference)
+    val audit = "dbt_test__audit_accepted_values_ct_m_grp"
+    assert(r.readTable(audit).select("id").as[Long].collect().sorted.toSeq ==
+      Seq(2L, 3L))
+    val retry = new PipelineRunner(spark, spec(tests), w).runCommand("retry")
+    assert(!retry.success)
+    assert(retry.modelsRun == failing)
   }
 
   test("test --store-failures forces storing without the config") {
